@@ -1,6 +1,8 @@
-"""Sequential Renko compression kernel, shared by the batch operator
-(`renkodf_spark.operators.renko`) and the streaming operator
-(`renkodf_spark.streaming`).
+"""Sequential Renko compression kernel and the one state protocol every
+Renko host speaks: the batch operators (`operators.renko`,
+`operators.renko_chunked`, `operators.renko_subchunk`), the streaming
+operators (`streaming.renko_stream`, `streaming.renko_tws`) and the
+single-process engine (`live.RenkoLive`).
 
 Semantics reproduce srlcarlg/renkodf (reference at
 ``/root/reference/src/renkodf/renkodf.py``):
@@ -26,9 +28,44 @@ The implementation is original, not a copy: output buffers grow
 IndexError when a gap emits more bricks than that — SURVEY.md §2 O-6 —
 a cap we deliberately do not inherit) and there is a single emission
 block instead of two duplicated branch bodies.
+
+State protocol
+--------------
+*Kernel state* is the mutable list ``[last_close, last_dir, wick_min,
+wick_max, volume, tick_open]`` — the scalar state of RenkoWS
+(renkodf.py:504-508) plus the batch-only tick_open position
+(renkodf.py:92). Bit-equal state in, bit-equal bricks out: that is what
+lets every host cut the tick stream anywhere.
+
+*Carry* is what crosses a Spark boundary (window to window in
+``renko_chunked``, sub-chunk to repair in ``renko_subchunk``): the
+kernel state with a global ``tick_open``, plus ``next_seq`` (the next
+``brick_seq``), ``tick_offset`` (ticks already consumed) and
+``first_ts`` (the first brick's label, for the first-label drop). Its
+columns are ``CARRY_FIELDS``; ``pack_carry``/``unpack_carry`` move one
+carry in and out of an Arrow row bit for bit.
+
+*Starts* — a segment begins from one of three states:
+
+- batch cold start, ``new_state``: anchor, direction 0, scan from the
+  second tick;
+- streaming cold start, ``stream_cold_start``: the seed row plus
+  ``[anchor, 1, anchor, anchor, 1, 0]`` (the reference seeds direction
+  1, renkodf.py:504-508), scan from the second tick;
+- warm start from the last row of a ``to_rws`` export, ``warm_start``.
+
+*Segment*: ``run_segment`` scans one sorted run of ticks from a start
+state with the density-appropriate kernel (``choose_scan``) and returns
+the bricks' event times and value arrays. ``sorted_group``,
+``label_run`` and ``brick_columns`` read a host's Arrow tick group in
+canonical order, find the first-label run and build the output columns.
+Every host is then a way of scheduling segments over this state.
 """
 
 from __future__ import annotations
+
+import numpy as np
+from pyspark.sql import types as T
 
 # Canonical wide-table value columns, in order. The batch operator adds
 # `symbol`, `brick_seq` and `event_time` around these; the streaming
@@ -54,13 +91,6 @@ WIDE_VALUE_COLUMNS = (
     "fake_high",
     "fake_low",
 )
-
-# Kernel state vector layout (mutable list):
-#   [last_close, last_direction, wick_min, wick_max, volume, tick_open]
-# Mirrors the scalar state of RenkoWS (renkodf.py:504-508) plus the
-# batch-only tick_open position (renkodf.py:92).
-STATE_LEN = 6
-
 
 def grid_anchor(price: float, brick: float) -> float:
     """Initial reference price: floor of the first price to the brick
@@ -97,8 +127,6 @@ def output_arrays(out: dict) -> dict:
     """Zero-copy numpy views over the output buffers (event_time stays
     a list: batch callers rebuild it from tick_index_close, streaming
     callers pass int64 epochs)."""
-    import numpy as np
-
     res = {"event_time": out["event_time"]}
     for name in WIDE_VALUE_COLUMNS:
         buf = out[name]
@@ -125,6 +153,22 @@ def seed_row(timestamp, anchor: float) -> dict:
     row["tick_index_open"] = 0
     row["tick_index_close"] = 0
     return row
+
+
+def stream_cold_start(timestamp, first_price: float, brick: float) -> tuple[dict, list]:
+    """Streaming cold start: the seed row and the kernel state that
+    mirrors it (direction 1, renkodf.py:504-508), so a first move *down*
+    needs a 2-brick traversal. Scan from the second tick."""
+    anchor = grid_anchor(first_price, brick)
+    return seed_row(timestamp, anchor), [anchor, 1, anchor, anchor, 1, 0]
+
+
+def warm_start(row) -> list:
+    """Kernel state resumed from the last row of a ``to_rws`` export
+    (anything indexable by column name): the wick restarts at the last
+    close, volume and direction carry over."""
+    close = float(row["close"])
+    return [close, int(row["direction"]), close, close, int(row["volume"]), 0]
 
 
 def scan_ticks(times, prices, start: int, brick: float, state: list, out: dict, stop: int | None = None) -> int:
@@ -282,8 +326,6 @@ def scan_ticks_vectorized(times, prices_np, start: int, brick: float, state: lis
     ~20-40x faster than the scalar loop when emission density is low;
     slower when nearly every tick emits — callers pick via
     `choose_scan` (renko_pandas does)."""
-    import numpy as np
-
     emitted = 0
     n = len(prices_np)
     i = start
@@ -333,8 +375,6 @@ def scan_ticks_vectorized(times, prices_np, start: int, brick: float, state: lis
 
 def choose_scan(prices_np, brick: float) -> bool:
     """True -> use the vectorized skip-scan (sparse emissions)."""
-    import numpy as np
-
     n = len(prices_np)
     if n < 4096:
         return False
@@ -347,3 +387,203 @@ def choose_scan(prices_np, brick: float) -> bool:
     # vectorized wins ~10x below this; the scalar loop wins above it
     # (measured: 0.013 -> 70 vs 7 M ticks/s; 0.04 -> 7.1 vs 8.5)
     return density < 0.02
+
+
+def check_brick(brick_size) -> None:
+    """Eager brick-size validation shared by every host (reference
+    Renko.__init__, renkodf.py:42-49)."""
+    if brick_size is None or brick_size <= 0:
+        raise ValueError("brick_size cannot be 'None' or '<= 0'")
+
+
+# ------------------------------------------------------------- segment
+
+
+def run_segment(times, prices, brick: float, state: list, start: int):
+    """Scan ``prices[start:]`` (numpy, already in tick order) from
+    ``state`` with the density-appropriate kernel, mutating ``state``.
+    Returns ``(event_time, arrays)``: each brick's close time (its
+    closing tick's timestamp, fancy-indexed from ``times``) and the wide
+    value arrays from ``output_arrays``. Tick indexes are local to
+    ``times``."""
+    out = new_output()
+    if len(prices):
+        if choose_scan(prices, brick):
+            scan_ticks_vectorized(times, prices, start, brick, state, out)
+        else:
+            # python-list indexing is ~2x faster than numpy scalar access
+            scan_ticks(times, prices.tolist(), start, brick, state, out)
+    arrs = output_arrays(out)
+    if not len(times):
+        return np.empty(0, dtype="datetime64[us]"), arrs
+    return times[arrs["tick_index_close"]], arrs
+
+
+def sorted_group(tbl):
+    """``(symbol, times, prices)`` of one Arrow tick group (columns
+    ``symbol``, ``__time``, ``__price``, ``__seq``) in the canonical
+    stable order: time, then input sequence. Non-empty groups only."""
+    tbl = tbl.combine_chunks()
+    t = tbl.column("__time").to_numpy(zero_copy_only=False)
+    p = tbl.column("__price").to_numpy(zero_copy_only=False)
+    s = tbl.column("__seq").to_numpy(zero_copy_only=False)
+    order = np.lexsort((s, t.view("int64")))
+    return tbl.column("symbol")[0].as_py(), t[order], p[order]
+
+
+def label_run(ev, first_ts) -> tuple[int, int]:
+    """``[lo, hi)`` of the bricks labelled ``first_ts`` in the
+    nondecreasing ``ev`` — the reference drops the first brick by index
+    label (renkodf.py:69), so every brick sharing its close time goes.
+    ``(0, 0)`` when there is no label yet."""
+    if first_ts is None:
+        return 0, 0
+    return int(np.searchsorted(ev, first_ts, side="left")), int(
+        np.searchsorted(ev, first_ts, side="right")
+    )
+
+
+def _const_str_array(value: str, n: int):
+    """Length-``n`` constant string column without an O(n) Python-object
+    pass: a dictionary array over one value, cast to plain string."""
+    import pyarrow as pa
+
+    if n == 0:
+        return pa.array([], pa.string())
+    return pa.DictionaryArray.from_arrays(
+        pa.array(np.zeros(n, dtype=np.int32)), pa.array([value], pa.string())
+    ).cast(pa.string())
+
+
+def brick_columns(sym: str, ev, arrs: dict, seq0: int, ts_type, lo: int = 0, hi: int = 0) -> dict:
+    """Arrow columns ``symbol``, ``brick_seq`` (from ``seq0``),
+    ``event_time`` and every wide value column for a segment's bricks,
+    minus the run ``[lo, hi)``."""
+    import pyarrow as pa
+
+    def cut(a):
+        if hi <= lo:
+            return a
+        return a[hi:] if lo == 0 else np.concatenate([a[:lo], a[hi:]])
+
+    ev = cut(ev)
+    m = len(ev)
+    cols = {
+        "symbol": _const_str_array(sym, m),
+        "brick_seq": pa.array(np.arange(seq0, seq0 + m, dtype=np.int64)),
+        "event_time": pa.array(ev).cast(ts_type),
+    }
+    for name in WIDE_VALUE_COLUMNS:
+        cols[name] = pa.array(cut(arrs[name]))
+    return cols
+
+
+# --------------------------------------------------------------- carry
+
+# Carry row columns, in carry-list order:
+#   [last_close, last_dir, wick_min, wick_max, volume, tick_open(global),
+#    next_seq, tick_offset, first_ts]
+CARRY_FIELDS = [
+    T.StructField("__st_last_close", T.DoubleType()),
+    T.StructField("__st_last_dir", T.LongType()),
+    T.StructField("__st_wick_min", T.DoubleType()),
+    T.StructField("__st_wick_max", T.DoubleType()),
+    T.StructField("__st_volume", T.LongType()),
+    T.StructField("__st_tick_open", T.LongType()),
+    T.StructField("__st_next_seq", T.LongType()),
+    T.StructField("__st_tick_offset", T.LongType()),
+    T.StructField("__st_first_ts", T.TimestampType()),
+]
+CARRY_COLS = [f.name for f in CARRY_FIELDS]
+
+
+def arrow_type(dt, ts_type):
+    """Spark type -> the exact Arrow type ``applyInArrow`` validates
+    against; timestamps carry the session timezone the input columns
+    arrive with (``ts_type``)."""
+    import pyarrow as pa
+
+    if isinstance(dt, T.TimestampType):
+        return ts_type
+    return {
+        T.StringType: pa.string(),
+        T.LongType: pa.int64(),
+        T.DoubleType: pa.float64(),
+        T.IntegerType: pa.int32(),
+        T.BinaryType: pa.binary(),
+    }[type(dt)]
+
+
+def padded_table(schema, ts_type, cols: dict, m: int):
+    """A ``schema``-shaped Arrow table of ``m`` rows: ``cols`` supplies
+    the present columns, every other column is typed nulls."""
+    import pyarrow as pa
+
+    return pa.table(
+        [
+            cols[f.name] if f.name in cols else pa.nulls(m, arrow_type(f.dataType, ts_type))
+            for f in schema.fields
+        ],
+        names=[f.name for f in schema.fields],
+    )
+
+
+def pack_carry(schema, ts_type, sym: str, carry: list, **extra):
+    """One ``schema``-shaped Arrow row: ``sym``, the carry in its
+    ``CARRY_COLS`` (``None`` -> null; ``first_ts`` a ``datetime64`` UTC
+    instant), the length-1 ``extra`` columns, every other column null."""
+    import pyarrow as pa
+
+    cols = {"symbol": pa.array([sym], pa.string()), **extra}
+    for f, v in zip(CARRY_FIELDS, carry):
+        at = arrow_type(f.dataType, ts_type)
+        cols[f.name] = pa.nulls(1, at) if v is None else pa.array([v]).cast(at)
+    return padded_table(schema, ts_type, cols, 1)
+
+
+def unpack_carry(tbl, i: int = 0) -> list:
+    """Row ``i``'s carry columns back as the carry list. ``first_ts``
+    comes back as ``datetime64[us]`` (a UTC instant on the same basis as
+    the kernel's event times) or ``None``: ``as_py`` would hand back a
+    session-timezone ``datetime`` instead."""
+    carry = [tbl.column(c)[i].as_py() for c in CARRY_COLS[:-1]]
+    ft = tbl.column(CARRY_COLS[-1]).slice(i, 1).to_numpy(zero_copy_only=False)[0]
+    carry.append(None if np.isnat(ft) else ft.astype("datetime64[us]"))
+    return carry
+
+
+# --------------------------------------------------------- forming bar
+
+
+def forming_bar(mode: str, price: float, last_open: float, last_close: float, wick_min: float, wick_max: float):
+    """The in-progress bar's ``(open, high, low, direction)`` after the
+    last completed brick (``last_open`` is its ``mode``-projected open),
+    with the reference's renko_animate branching and quirks
+    (renkodf.py:817-849): ``normal`` pins high/low to the raw price, and
+    a move past the last brick opens at its close (at the running wick
+    under the nongap modes)."""
+    normal = mode == "normal"
+    nongap = mode in ("nongap", "reverse-nongap", "fake-r-nongap")
+    o = price
+    h = price if normal else wick_max
+    lo = price if normal else wick_min
+    if last_close > last_open:  # previous brick was up
+        if price > last_close:
+            o = wick_min if nongap else last_close
+            if normal:
+                lo = last_close
+        elif price < last_open:
+            o = wick_max if nongap else last_open
+            if normal:
+                h = last_open
+    else:
+        if price < last_close:
+            o = wick_max if nongap else last_close
+            if normal:
+                h = last_close
+        elif price > last_open:
+            o = wick_min if nongap else last_open
+            if normal:
+                lo = last_open
+    direction = 1 if price > o else -1 if price < o else 0
+    return o, h, lo, direction

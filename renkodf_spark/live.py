@@ -23,10 +23,12 @@ import pandas as pd
 
 from renkodf_spark.kernel import (
     WIDE_VALUE_COLUMNS,
-    grid_anchor,
+    check_brick,
+    forming_bar,
     new_output,
     scan_ticks,
-    seed_row,
+    stream_cold_start,
+    warm_start,
 )
 from renkodf_spark.schema import MODE_SOURCES, MODES
 
@@ -44,44 +46,25 @@ class RenkoLive:
         external_df: pd.DataFrame | None = None,
         ts_unit: str = "us",
     ):
+        self._ts_unit = ts_unit
         if external_df is None:
-            if brick_size is None or brick_size <= 0:
-                raise ValueError("brick_size cannot be 'None' or '<= 0'")
+            check_brick(brick_size)
             if ws_price is None:
                 raise ValueError("ws_price cannot be 'None'")
             if ws_timestamp is None:
                 raise ValueError("ws_timestamp cannot be 'None'")
-
-        self._ts_unit = ts_unit
-        self._buf: dict[str, list] = {"timestamp": []}
-        for c in _LIVE_COLUMNS:
-            self._buf[c] = []
-
-        if external_df is None:
             self._brick_size = float(brick_size)
-            anchor = grid_anchor(ws_price, brick_size)
-            seed = seed_row(int(ws_timestamp), anchor)
-            self._buf["timestamp"].append(int(ws_timestamp))
+            seed, self._state = stream_cold_start(int(ws_timestamp), ws_price, brick_size)
+            self._buf = {"timestamp": [seed["event_time"]]}
             for c in _LIVE_COLUMNS:
-                self._buf[c].append(seed[c])
-            # state: [last_close, last_dir, wick_min, wick_max, volume, tick_open]
-            # seeded from the seed row like renkodf.py:504-508 (dir = 1)
-            self._state = [anchor, 1, anchor, anchor, 1, 0]
+                self._buf[c] = [seed[c]]
         else:
             ext = external_df
             self._brick_size = float(ext["brick_size"].iloc[0])
-            self._buf["timestamp"] = ext["timestamp"].astype("int64").tolist()
+            self._buf = {"timestamp": ext["timestamp"].astype("int64").tolist()}
             for c in _LIVE_COLUMNS:
                 self._buf[c] = ext[c].tolist()
-            last_close = float(ext["close"].iloc[-1])
-            self._state = [
-                last_close,
-                int(ext["direction"].iloc[-1]),
-                last_close,
-                last_close,
-                int(ext["volume"].iloc[-1]),
-                0,
-            ]
+            self._state = warm_start({c: ext[c].iloc[-1] for c in ("close", "direction", "volume")})
 
         self._initial_df = self._wide_frame()
         self._ws_timestamp = ws_timestamp if ws_timestamp is not None else self._buf["timestamp"][-1]
@@ -185,35 +168,10 @@ class RenkoLive:
             df_ws = df_ws.drop(columns=["timestamp"])
             return pd.concat([self._initial_df, df_ws])
 
-        forming["high"][-1] = wick_max if mode != "normal" else ws_price
-        forming["low"][-1] = wick_min if mode != "normal" else ws_price
-
-        nongap_rule = mode in ("nongap", "reverse-nongap", "fake-r-nongap")
-        prev_close = df["close"].iloc[-1]
-        prev_open = df["open"].iloc[-1]
-        if prev_close > prev_open:  # last brick was up
-            if ws_price > prev_close:
-                forming["open"][-1] = wick_min if nongap_rule else prev_close
-                if mode == "normal":
-                    forming["low"][-1] = prev_close
-            elif ws_price < prev_open:
-                forming["open"][-1] = wick_max if nongap_rule else prev_open
-                if mode == "normal":
-                    forming["high"][-1] = prev_open
-        else:  # last brick was down
-            if ws_price < prev_close:
-                forming["open"][-1] = wick_max if nongap_rule else prev_close
-                if mode == "normal":
-                    forming["high"][-1] = prev_close
-            elif ws_price > prev_open:
-                forming["open"][-1] = wick_min if nongap_rule else prev_open
-                if mode == "normal":
-                    forming["low"][-1] = prev_open
-
-        if forming["close"][-1] > forming["open"][-1]:
-            forming["direction"][-1] = 1
-        elif forming["close"][-1] < forming["open"][-1]:
-            forming["direction"][-1] = -1
+        o, h, lo, direction = forming_bar(
+            mode, ws_price, df["open"].iloc[-1], df["close"].iloc[-1], wick_min, wick_max
+        )
+        forming.update(open=[o], high=[h], low=[lo], direction=[direction])
 
         df_ws = pd.DataFrame(forming)
         df_ws.index = pd.DatetimeIndex(pd.to_datetime(df_ws["timestamp"], unit=self._ts_unit))

@@ -18,7 +18,6 @@ label drop (renkodf.py:69), `renko_df` projection (renkodf.py:291-387),
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -26,12 +25,12 @@ from pyspark.sql import types as T
 
 from renkodf_spark.kernel import (
     WIDE_VALUE_COLUMNS,
-    choose_scan,
-    new_output,
+    brick_columns,
+    check_brick,
+    label_run,
     new_state,
-    output_arrays,
-    scan_ticks,
-    scan_ticks_vectorized,
+    run_segment,
+    sorted_group,
 )
 from renkodf_spark.schema import (
     MODE_SOURCES,
@@ -41,7 +40,39 @@ from renkodf_spark.schema import (
     WIDE_SCHEMA,
 )
 
-_SEQ_COL = "__tick_seq"
+
+def clean_ticks(
+    ticks: DataFrame, brick_size: float, symbol_col: str, time_col: str, price_col: str
+) -> DataFrame:
+    """The tick-cleaning step every Spark host runs first: eager
+    validation (before any Spark job runs), then the slim projection
+    ``symbol`` (string; ``"0"`` when the column is absent), ``__time``
+    (cast to TIMESTAMP, so TIMESTAMP_NTZ input works) and ``__price``
+    (double).
+
+    Ticks with a null time or a null, NaN or infinite price are dropped:
+    the recurrence would silently absorb NaN into the wick state (the
+    reference has no guard and corrupts) and an infinite move has no
+    brick count (``int(inf)`` raises in the worker)."""
+    check_brick(brick_size)
+    if price_col not in ticks.columns:
+        raise ValueError(f"Column '{price_col}' doesn't exist!")
+    if time_col not in ticks.columns:
+        raise ValueError(f"Column '{time_col}' doesn't exist!")
+    symbol = (
+        F.col(symbol_col).cast("string") if symbol_col in ticks.columns else F.lit("0")
+    )
+    price = F.col("__price")
+    return ticks.select(
+        symbol.alias("symbol"),
+        F.col(time_col).cast("timestamp").alias("__time"),
+        F.col(price_col).cast("double").alias("__price"),
+    ).filter(
+        F.col("__time").isNotNull()
+        & price.isNotNull()
+        & ~F.isnan(price)
+        & (F.abs(price) != F.lit(float("inf")))
+    )
 
 
 def renko_pandas(
@@ -59,28 +90,10 @@ def renko_pandas(
     by unit tests.
     """
     times = pdf[time_col].to_numpy()
-    prices_np = pdf[price_col].to_numpy()
-    out = new_output()
-    if len(prices_np) > 0:
-        state = new_state(float(prices_np[0]), brick_size)
-        if choose_scan(prices_np, brick_size):
-            scan_ticks_vectorized(times, prices_np, 1, brick_size, state, out)
-        else:
-            # python-list indexing is ~2x faster than numpy scalar access
-            scan_ticks(times, prices_np.tolist(), 1, brick_size, state, out)
-
-    arrs = output_arrays(out)
-    # a brick's close time is its closing tick's timestamp: fancy-index
-    # the tick array instead of converting boxed datetime scalars
-    event_time = (
-        times[arrs["tick_index_close"]]
-        if len(times)
-        else np.empty(0, dtype="datetime64[us]")
-    )
-    wide = {"event_time": event_time}
-    for name in WIDE_VALUE_COLUMNS:
-        wide[name] = arrs[name]
-    res = pd.DataFrame(wide)
+    prices = pdf[price_col].to_numpy()
+    state = new_state(float(prices[0]), brick_size) if len(prices) else None
+    ev, arrs = run_segment(times, prices, brick_size, state, 1)
+    res = pd.DataFrame({"event_time": ev, **{c: arrs[c] for c in WIDE_VALUE_COLUMNS}})
 
     if drop_first and len(res):
         # reference drops by index label (renkodf.py:69): every brick
@@ -111,15 +124,7 @@ def renko(
     travels out (Catalyst cannot prune through a grouped-map UDF's
     output schema, so callers that want one mode pass just its columns
     — `renko_mode` does this automatically)."""
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
-    if price_col not in ticks.columns:
-        raise ValueError(f"Column '{price_col}' doesn't exist!")
-
-    if symbol_col not in ticks.columns:
-        ticks = ticks.withColumn(symbol_col, F.lit("0"))
-    if time_col not in ticks.columns:
-        raise ValueError(f"Column '{time_col}' doesn't exist!")
+    slim = clean_ticks(ticks, brick_size, symbol_col, time_col, price_col)
 
     if value_columns is None:
         out_schema = WIDE_SCHEMA
@@ -133,19 +138,8 @@ def renko(
         out_columns = [f.name for f in out_schema.fields]
 
     # Deterministic intra-timestamp order: capture input order before the
-    # shuffle so equal-timestamp ticks replay in file order. Null/NaN
-    # prices or timestamps are dropped up front — the recurrence would
-    # otherwise silently absorb NaN into the wick state (the reference
-    # has no guard and corrupts); the filter sits on the scan so it
-    # pushes down.
-    slim = ticks.select(
-        F.col(symbol_col).cast("string").alias("symbol"),
-        F.col(time_col).alias("__time"),
-        F.col(price_col).cast("double").alias("__price"),
-        F.monotonically_increasing_id().alias(_SEQ_COL),
-    ).filter(
-        F.col("__time").isNotNull() & F.col("__price").isNotNull() & ~F.isnan("__price")
-    )
+    # shuffle so equal-timestamp ticks replay in file order.
+    slim = slim.withColumn("__seq", F.monotonically_increasing_id())
 
     # Arrow-native kernel host (r8): the old applyInPandas run paid,
     # per group, a pandas mergesort (5x slower than lexsort+take at
@@ -158,69 +152,15 @@ def renko(
     def run_arrow(tbl: "pa.Table") -> "pa.Table":
         import pyarrow as pa
 
-        tbl = tbl.combine_chunks()
         ts_type = tbl.schema.field("__time").type
-        t = tbl.column("__time").to_numpy(zero_copy_only=False)
-        p = tbl.column("__price").to_numpy(zero_copy_only=False)
-        s = tbl.column(_SEQ_COL).to_numpy(zero_copy_only=False)
-        # stable total order (__seq is unique) == the old mergesort
-        order = np.lexsort((s, t.view("int64")))
-        t = t[order]
-        p = p[order]
-        ev, arrs = _scan_sorted(t, p, brick_size)
-        # reference drops by index label (renkodf.py:69): every brick
-        # sharing the first brick's close timestamp goes away — ev is
-        # nondecreasing, so that's a prefix slice, not a mask copy
-        cut = (
-            int(np.searchsorted(ev, ev[0], side="right"))
-            if (drop_first and len(ev))
-            else 0
-        )
-        m = len(ev) - cut
-        sym = tbl.column("symbol")[0].as_py() if tbl.num_rows else ""
-        cols: dict[str, pa.Array] = {
-            "symbol": _const_str_array(sym, m),
-            "brick_seq": pa.array(np.arange(m, dtype=np.int64)),
-            "event_time": pa.array(ev[cut:]).cast(ts_type),
-        }
-        for name in WIDE_VALUE_COLUMNS:
-            cols[name] = pa.array(arrs[name][cut:])
+        sym, t, p = sorted_group(tbl)
+        ev, arrs = run_segment(t, p, brick_size, new_state(float(p[0]), brick_size), 1)
+        # ev is nondecreasing, so the first-label run is a prefix slice
+        lo, hi = label_run(ev, ev[0] if drop_first and len(ev) else None)
+        cols = brick_columns(sym, ev, arrs, 0, ts_type, lo, hi)
         return pa.table({c: cols[c] for c in out_columns})
 
     return slim.groupBy("symbol").applyInArrow(run_arrow, out_schema)
-
-
-def _scan_sorted(times: np.ndarray, prices: np.ndarray, brick_size: float):
-    """Kernel over already-sorted tick arrays: returns (event_time
-    array, wide value arrays) — the shared numpy core of the Arrow
-    hosts (no pandas, no copies beyond the kernel's own buffers)."""
-    out = new_output()
-    if len(prices) > 0:
-        state = new_state(float(prices[0]), brick_size)
-        if choose_scan(prices, brick_size):
-            scan_ticks_vectorized(times, prices, 1, brick_size, state, out)
-        else:
-            # python-list indexing is ~2x faster than numpy scalar access
-            scan_ticks(times, prices.tolist(), 1, brick_size, state, out)
-    arrs = output_arrays(out)
-    ev = (
-        times[arrs["tick_index_close"]]
-        if len(times)
-        else np.empty(0, dtype="datetime64[us]")
-    )
-    return ev, arrs
-
-
-def _const_str_array(value: str, n: int):
-    """Length-``n`` constant string column without an O(n) Python-object
-    pass: a dictionary array over one value, cast to plain string."""
-    import pyarrow as pa
-
-    if n == 0:
-        return pa.array([], pa.string())
-    return pa.DictionaryArray.from_arrays(
-        pa.array(np.zeros(n, dtype=np.int32)), pa.array([value], pa.string())
-    ).cast(pa.string())
 
 
 def renko_df(

@@ -64,45 +64,28 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from renkodf_spark.kernel import (
+    CARRY_COLS,
+    CARRY_FIELDS,
     WIDE_VALUE_COLUMNS,
-    choose_scan,
-    grid_anchor,
-    new_output,
-    output_arrays,
-    scan_ticks,
-    scan_ticks_vectorized,
+    brick_columns,
+    label_run,
+    new_state,
+    pack_carry,
+    padded_table,
+    run_segment,
+    sorted_group,
+    unpack_carry,
 )
-from renkodf_spark.operators.renko import _const_str_array
+from renkodf_spark.operators.renko import clean_ticks
 from renkodf_spark.schema import WIDE_COLUMN_NAMES, WIDE_SCHEMA
 
-# per-symbol state carried between windows:
-#   kernel vector [last_close, last_dir, wick_min, wick_max, volume,
-#   tick_open(global)] + next_seq, tick_offset, first_ts (label-drop)
-_STATE_FIELDS = [
-    ("last_close", T.DoubleType()),
-    ("last_dir", T.LongType()),
-    ("wick_min", T.DoubleType()),
-    ("wick_max", T.DoubleType()),
-    ("volume", T.LongType()),
-    ("tick_open", T.LongType()),
-    ("next_seq", T.LongType()),
-    ("tick_offset", T.LongType()),
-    ("first_ts", T.TimestampType()),
-]
-
-_STATE_COLS = [f"__st_{name}" for name, _ in _STATE_FIELDS]
-
-_STATE_SCHEMA = T.StructType(
-    [T.StructField("symbol", T.StringType())]
-    + [T.StructField(f"__st_{name}", dtype) for name, dtype in _STATE_FIELDS]
-)
+# per-symbol carry state between windows (kernel.CARRY_FIELDS)
+_STATE_SCHEMA = T.StructType([T.StructField("symbol", T.StringType())] + CARRY_FIELDS)
 
 # bricks and the one state row share the applyInArrow output table;
 # __is_state flags the state row.
 _PACKED_SCHEMA = T.StructType(
-    list(WIDE_SCHEMA.fields)
-    + [T.StructField("__is_state", T.IntegerType())]
-    + [T.StructField(f"__st_{name}", dtype) for name, dtype in _STATE_FIELDS]
+    list(WIDE_SCHEMA.fields) + [T.StructField("__is_state", T.IntegerType())] + CARRY_FIELDS
 )
 
 _SLIM_SCHEMA = T.StructType(
@@ -114,62 +97,6 @@ _SLIM_SCHEMA = T.StructType(
         T.StructField("__win", T.LongType()),
     ]
 )
-
-
-def _arrow_type(dt, ts_type):
-    """Spark type -> exact arrow type for the packed cogroup output
-    (applyInArrow validates strictly; timestamps must carry the session
-    timezone the input columns arrive with)."""
-    import pyarrow as pa
-
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.TimestampType):
-        return ts_type
-    raise TypeError(f"unmapped spark type {dt}")
-
-
-def _packed_table(ts_type, cols: dict, m: int):
-    """A ``_PACKED_SCHEMA``-shaped arrow table: ``cols`` supplies the
-    present columns, everything else becomes ``m`` typed nulls."""
-    import pyarrow as pa
-
-    names, arrays = [], []
-    for f in _PACKED_SCHEMA.fields:
-        names.append(f.name)
-        arrays.append(
-            cols[f.name]
-            if f.name in cols
-            else pa.nulls(m, _arrow_type(f.dataType, ts_type))
-        )
-    return pa.table(arrays, names=names)
-
-
-def _state_row_table(ts_type, sym: str, st: dict):
-    """The one carry-state row as a packed arrow table (brick columns
-    null). Values may be python scalars, numpy datetime64, tz-aware
-    datetimes, or None — each lands as its field's exact arrow type."""
-    import pyarrow as pa
-
-    cols = {
-        "symbol": pa.array([sym], pa.string()),
-        "__is_state": pa.array([1], pa.int32()),
-    }
-    for name, dtype in _STATE_FIELDS:
-        c = f"__st_{name}"
-        v = st.get(c)
-        at = _arrow_type(dtype, ts_type)
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            cols[c] = pa.nulls(1, at)
-        else:
-            cols[c] = pa.array([v]).cast(at)
-    return _packed_table(ts_type, cols, 1)
 
 
 def renko_chunked(
@@ -208,8 +135,12 @@ def renko_chunked(
     can't be verified (non-dyadic brick arithmetic) the repair pass
     degrades to the previous serial scan for that chunk. Pass
     ``subchunk_threshold=None`` to disable."""
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
+    slim = (
+        clean_ticks(ticks, brick_size, symbol_col, time_col, price_col)
+        .withColumn("__seq", F.monotonically_increasing_id())
+        .withColumn("__win", F.unix_micros(F.window("__time", window).start))
+    )
+
     spark = ticks.sparkSession
     if reliable_checkpoint and spark.sparkContext.getCheckpointDir() is None:
         raise ValueError(
@@ -217,19 +148,6 @@ def renko_chunked(
             "spark.sparkContext.setCheckpointDir(<fault-tolerant path>) "
             "— the per-window checkpoints must survive executor loss"
         )
-
-    # same null/NaN guard as renko(): the recurrence would silently
-    # absorb NaN into the wick state (int(abs_moved) raises on the
-    # scalar path); the filter sits on the scan so it pushes down.
-    slim = ticks.select(
-        F.col(symbol_col).cast("string").alias("symbol"),
-        F.col(time_col).alias("__time"),
-        F.col(price_col).cast("double").alias("__price"),
-        F.monotonically_increasing_id().alias("__seq"),
-        F.unix_micros(F.window(F.col(time_col), window).start).alias("__win"),
-    ).filter(
-        F.col("__time").isNotNull() & F.col("__price").isNotNull() & ~F.isnan("__price")
-    )
 
     own_tmp = staging_dir is None
     if own_tmp:
@@ -395,118 +313,46 @@ def _run_windows(
     def _run_body(tick_tbl, state_tbl):
         import pyarrow as pa
 
-        tick_tbl = tick_tbl.combine_chunks()
         ts_type = tick_tbl.schema.field("__time").type
-        have_state = state_tbl.num_rows > 0
-
+        carry = unpack_carry(state_tbl) if state_tbl.num_rows else None
         if tick_tbl.num_rows == 0:
-            if not have_state:
-                return _packed_table(ts_type, {}, 0)
+            if carry is None:
+                return padded_table(_PACKED_SCHEMA, ts_type, {}, 0)
             # symbol idle this window: re-emit carried state unchanged
-            return _state_row_table(
-                ts_type,
-                state_tbl.column("symbol")[0].as_py(),
-                {c: state_tbl.column(c)[0].as_py() for c in _STATE_COLS},
-            )
+            sym = state_tbl.column("symbol")[0].as_py()
+            return pack_carry(_PACKED_SCHEMA, ts_type, sym, carry, __is_state=pa.array([1], pa.int32()))
 
-        sym = tick_tbl.column("symbol")[0].as_py()
-        t = tick_tbl.column("__time").to_numpy(zero_copy_only=False)
-        p = tick_tbl.column("__price").to_numpy(zero_copy_only=False)
-        s = tick_tbl.column("__seq").to_numpy(zero_copy_only=False)
-        # stable total order (__seq unique) == the old mergesort
-        order = np.lexsort((s, t.view("int64")))
-        times = t[order]
-        prices = p[order]
-
-        if not have_state:
-            anchor = grid_anchor(float(prices[0]), brick_size)
-            kstate = [anchor, 0, anchor, anchor, 1, 1]  # tick_open: global idx 1
+        sym, times, prices = sorted_group(tick_tbl)
+        if carry is None:
+            kstate = new_state(float(prices[0]), brick_size)  # tick_open: global idx 1
             next_seq, offset, first_ts = 0, 0, None
             start = 1
         else:
-            st = {
-                c: state_tbl.column(c)[0].as_py()
-                for c in _STATE_COLS
-                if c != "__st_first_ts"
-            }
-            offset = int(st["__st_tick_offset"])
-            next_seq = int(st["__st_next_seq"])
-            # read as datetime64[us] (UTC instants, same basis as `ev`
-            # below) — as_py would hand back a session-tz datetime
-            ft = state_tbl.column("__st_first_ts").to_numpy(zero_copy_only=False)[0]
-            first_ts = None if np.isnat(ft) else ft.astype("datetime64[us]")
-            # kernel works in window-local indexes; state keeps global
-            kstate = [
-                float(st["__st_last_close"]),
-                int(st["__st_last_dir"]),
-                float(st["__st_wick_min"]),
-                float(st["__st_wick_max"]),
-                int(st["__st_volume"]),
-                int(st["__st_tick_open"]) - offset,
-            ]
+            # kernel works in window-local indexes; the carry keeps global
+            kstate, (next_seq, offset, first_ts) = carry[:6], carry[6:]
+            kstate[5] -= offset
             start = 0
 
-        out = new_output()
         t_k0 = time.perf_counter() if acc_kernel is not None else 0.0
-        if choose_scan(prices, brick_size):
-            scan_ticks_vectorized(times, prices, start, brick_size, kstate, out)
-        else:
-            scan_ticks(times, prices.tolist(), start, brick_size, kstate, out)
+        ev, arrs = run_segment(times, prices, brick_size, kstate, start)
         if acc_kernel is not None:
             acc_kernel.add(time.perf_counter() - t_k0)
-
-        arrs = output_arrays(out)
-        # close time = closing tick's timestamp (indexes still local here)
-        ev = (
-            times[arrs["tick_index_close"]].astype("datetime64[us]")
-            if len(times)
-            else np.empty(0, dtype="datetime64[us]")
-        )
         if offset:
             arrs["tick_index_open"] += offset
             arrs["tick_index_close"] += offset
 
         if len(ev) and first_ts is None:
             first_ts = ev[0]
-        lo = hi = 0
-        if drop_first and first_ts is not None:
-            # ev is nondecreasing, so label-equality is a contiguous run
-            lo = int(np.searchsorted(ev, first_ts, side="left"))
-            hi = int(np.searchsorted(ev, first_ts, side="right"))
+        lo, hi = label_run(ev, first_ts if drop_first else None)
+        cols = brick_columns(sym, ev, arrs, next_seq, ts_type, lo, hi)
+        m = len(cols["brick_seq"])
+        cols["__is_state"] = pa.array(np.zeros(m, dtype=np.int32))
+        bricks = padded_table(_PACKED_SCHEMA, ts_type, cols, m)
 
-        def cutv(a):
-            return np.concatenate([a[:lo], a[hi:]]) if hi > lo else a
-
-        ev = cutv(ev)
-        m = len(ev)
-        cols = {
-            "symbol": _const_str_array(sym, m),
-            "brick_seq": pa.array(
-                np.arange(int(next_seq), int(next_seq) + m, dtype=np.int64)
-            ),
-            "event_time": pa.array(ev).cast(ts_type),
-            "__is_state": pa.array(np.zeros(m, dtype=np.int32)),
-        }
-        for name in WIDE_VALUE_COLUMNS:
-            cols[name] = pa.array(cutv(arrs[name]))
-        bricks = _packed_table(ts_type, cols, m)
-
-        state_row = _state_row_table(
-            ts_type,
-            sym,
-            {
-                "__st_last_close": kstate[0],
-                "__st_last_dir": kstate[1],
-                "__st_wick_min": kstate[2],
-                "__st_wick_max": kstate[3],
-                "__st_volume": kstate[4],
-                "__st_tick_open": kstate[5] + offset,  # back to global
-                "__st_next_seq": int(next_seq) + m,
-                "__st_tick_offset": offset + len(times),
-                "__st_first_ts": first_ts,
-            },
-        )
-        return pa.concat_tables([bricks, state_row])
+        kstate[5] += offset  # back to global
+        carry = [*kstate, next_seq + m, offset + len(times), first_ts]
+        state = pack_carry(_PACKED_SCHEMA, ts_type, sym, carry, __is_state=pa.array([1], pa.int32()))
+        return pa.concat_tables([bricks, state])
 
     # skew-aware sub-chunking machinery (only paid when a hot (window,
     # symbol) pair exists — see module renko_subchunk for the design)
@@ -552,7 +398,7 @@ def _run_windows(
             )
             t_bricks = time.perf_counter()
             state_df = ck(
-                part.filter(F.col("__is_state") == 1).select("symbol", *_STATE_COLS)
+                part.filter(F.col("__is_state") == 1).select("symbol", *CARRY_COLS)
             )
             part.unpersist()
             hot_stats = None
@@ -597,7 +443,7 @@ def _states_as_sub(state_df: DataFrame) -> DataFrame:
             cols.append(F.col("symbol"))
         elif f.name == "__row_kind":
             cols.append(F.lit(KIND_STATE).cast("int").alias("__row_kind"))
-        elif f.name in _STATE_COLS:
+        elif f.name in CARRY_COLS:
             cols.append(F.col(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
@@ -734,9 +580,9 @@ def _run_hot_window(
     t_bricks = time.perf_counter()
     new_state = ck(
         part.filter(F.col("__is_state") == 1)
-        .select("symbol", *_STATE_COLS)
+        .select("symbol", *CARRY_COLS)
         .unionByName(
-            rep.filter(F.col("__row_kind") == KIND_STATE).select("symbol", *_STATE_COLS)
+            rep.filter(F.col("__row_kind") == KIND_STATE).select("symbol", *CARRY_COLS)
         )
     )
     part.unpersist()

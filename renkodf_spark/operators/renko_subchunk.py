@@ -72,15 +72,23 @@ import numpy as np
 from pyspark.sql import types as T
 
 from renkodf_spark.kernel import (
+    CARRY_FIELDS,
     WIDE_VALUE_COLUMNS,
+    brick_columns,
     choose_scan,
     grid_anchor,
+    label_run,
     new_output,
+    new_state,
     output_arrays,
+    pack_carry,
+    padded_table,
+    run_segment,
     scan_ticks,
     scan_ticks_vectorized,
+    sorted_group,
+    unpack_carry,
 )
-from renkodf_spark.operators.renko import _const_str_array
 from renkodf_spark.schema import WIDE_SCHEMA
 
 # sync-candidate horizon: emitting ticks recorded per speculative chunk
@@ -88,20 +96,6 @@ from renkodf_spark.schema import WIDE_SCHEMA
 # the first handful of emissions; past the horizon the repair pass
 # falls back to a full serial scan of that one chunk.
 SYNC_CAP = 16384
-
-# per-symbol carry state fields (mirrors renko_chunked._STATE_FIELDS)
-_STATE_FIELDS = [
-    ("last_close", T.DoubleType()),
-    ("last_dir", T.LongType()),
-    ("wick_min", T.DoubleType()),
-    ("wick_max", T.DoubleType()),
-    ("volume", T.LongType()),
-    ("tick_open", T.LongType()),
-    ("next_seq", T.LongType()),
-    ("tick_offset", T.LongType()),
-    ("first_ts", T.TimestampType()),
-]
-_STATE_COLS = [f"__st_{name}" for name, _ in _STATE_FIELDS]
 
 # row kinds in the shared spec/repair output schema
 KIND_BRICK = 0
@@ -111,7 +105,7 @@ KIND_SUMMARY = 3
 
 _EXTRA_FIELDS = (
     [T.StructField("__row_kind", T.IntegerType()), T.StructField("__sub", T.LongType())]
-    + [T.StructField(f"__st_{name}", dtype) for name, dtype in _STATE_FIELDS]
+    + CARRY_FIELDS
     + [
         T.StructField("__n_bricks", T.LongType()),
         T.StructField("__keep_from", T.LongType()),
@@ -128,65 +122,6 @@ _EXTRA_FIELDS = (
 # one shared output schema for both passes: brick rows, summary rows,
 # decision rows and state rows null-pad whatever they don't carry
 SUB_SCHEMA = T.StructType(list(WIDE_SCHEMA.fields) + _EXTRA_FIELDS)
-
-
-def _arrow_type(dt, ts_type):
-    import pyarrow as pa
-
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.TimestampType):
-        return ts_type
-    if isinstance(dt, T.BinaryType):
-        return pa.binary()
-    raise TypeError(f"unmapped spark type {dt}")
-
-
-def _sub_table(ts_type, cols: dict, m: int):
-    """A SUB_SCHEMA-shaped arrow table; absent columns become typed nulls."""
-    import pyarrow as pa
-
-    names, arrays = [], []
-    for f in SUB_SCHEMA.fields:
-        names.append(f.name)
-        arrays.append(
-            cols[f.name] if f.name in cols else pa.nulls(m, _arrow_type(f.dataType, ts_type))
-        )
-    return pa.table(arrays, names=names)
-
-
-def _state_cols(ts_type, st: dict):
-    """__st_* columns (length-1 arrays) from a python state dict."""
-    import pyarrow as pa
-
-    cols = {}
-    for name, dtype in _STATE_FIELDS:
-        c = f"__st_{name}"
-        v = st.get(c)
-        at = _arrow_type(dtype, ts_type)
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            cols[c] = pa.nulls(1, at)
-        else:
-            cols[c] = pa.array([v]).cast(at)
-    return cols
-
-
-def _sorted_group(tick_tbl):
-    """(symbol, times[datetime64], prices, n) in the canonical stable
-    (__time, __seq) order — identical to the one-shot operator's sort."""
-    tick_tbl = tick_tbl.combine_chunks()
-    sym = tick_tbl.column("symbol")[0].as_py()
-    t = tick_tbl.column("__time").to_numpy(zero_copy_only=False)
-    p = tick_tbl.column("__price").to_numpy(zero_copy_only=False)
-    s = tick_tbl.column("__seq").to_numpy(zero_copy_only=False)
-    order = np.lexsort((s, t.view("int64")))
-    return sym, t[order], p[order], len(p)
 
 
 def _emission_sync(arrs, n_prev: int, n_now: int):
@@ -210,49 +145,32 @@ def _emission_sync(arrs, n_prev: int, n_now: int):
 
 
 def _pack_sync(ticks, close, dirs, rev, cum):
-    k = min(len(ticks), SYNC_CAP)
-    return {
-        "__sync_ticks": ticks[:k].astype(np.int64).tobytes(),
-        "__sync_close": close[:k].astype(np.float64).tobytes(),
-        "__sync_dir": dirs[:k].astype(np.int8).tobytes(),
-        "__sync_rev": rev[:k].astype(np.int8).tobytes(),
-        "__sync_cum": cum[:k].astype(np.int64).tobytes(),
-    }
-
-
-def _unpack_sync(row: dict):
-    return (
-        np.frombuffer(row["__sync_ticks"] or b"", dtype=np.int64),
-        np.frombuffer(row["__sync_close"] or b"", dtype=np.float64),
-        np.frombuffer(row["__sync_dir"] or b"", dtype=np.int8),
-        np.frombuffer(row["__sync_rev"] or b"", dtype=np.int8),
-        np.frombuffer(row["__sync_cum"] or b"", dtype=np.int64),
-    )
-
-
-def _brick_cols(sym, arrs, lo, hi, times_local, ts_type, seq0: int):
-    """WIDE brick columns for bricks [lo:hi) of an output-array dict,
-    tick indexes left chunk-local, brick_seq starting at seq0."""
     import pyarrow as pa
 
-    m = hi - lo
-    ev = times_local[arrs["tick_index_close"][lo:hi]].astype("datetime64[us]")
-    cols = {
-        "symbol": _const_str_array(sym, m),
-        "brick_seq": pa.array(np.arange(seq0, seq0 + m, dtype=np.int64)),
-        "event_time": pa.array(ev).cast(ts_type),
-        "__row_kind": pa.array(np.full(m, KIND_BRICK, dtype=np.int32)),
+    k = min(len(ticks), SYNC_CAP)
+    return {
+        c: pa.array([a[:k].astype(dt).tobytes()], pa.binary())
+        for c, a, dt in (
+            ("__sync_ticks", ticks, np.int64),
+            ("__sync_close", close, np.float64),
+            ("__sync_dir", dirs, np.int8),
+            ("__sync_rev", rev, np.int8),
+            ("__sync_cum", cum, np.int64),
+        )
     }
-    for name in WIDE_VALUE_COLUMNS:
-        cols[name] = pa.array(arrs[name][lo:hi])
-    return cols, ev
 
 
-def _scan_full(times, prices, start, brick, kstate, out):
-    """Exact full scan with the density-appropriate kernel."""
-    if choose_scan(prices, brick):
-        return scan_ticks_vectorized(times, prices, start, brick, kstate, out)
-    return scan_ticks(times, prices.tolist(), start, brick, kstate, out)
+def _unpack_sync(tbl, i: int):
+    return tuple(
+        np.frombuffer(tbl.column(c)[i].as_py() or b"", dtype=dt)
+        for c, dt in (
+            ("__sync_ticks", np.int64),
+            ("__sync_close", np.float64),
+            ("__sync_dir", np.int8),
+            ("__sync_rev", np.int8),
+            ("__sync_cum", np.int64),
+        )
+    )
 
 
 def make_spec_runner(
@@ -284,125 +202,55 @@ def make_spec_runner(
         if tick_tbl.num_rows == 0:
             # state row for a sub-chunk with no ticks can't happen for
             # hot symbols (hot => ticks present); return empty
-            return _sub_table(ts_type, {}, 0)
+            return padded_table(SUB_SCHEMA, ts_type, {}, 0)
 
         sub = int(tick_tbl.column("__sub")[0].as_py())
-        sym, times, prices, n = _sorted_group(tick_tbl)
-        have_state = state_tbl.num_rows > 0
-
-        if sub == first_ids.get(sym, 0):
+        sym, times, prices = sorted_group(tick_tbl)
+        exact = sub == first_ids.get(sym, 0)
+        extra = {}
+        if exact:
             # ---- exact chunk-0 scan (bit-for-bit _run_body semantics,
             # local indexing; offset handling moves to the repair pass)
-            if not have_state:
-                anchor = grid_anchor(float(prices[0]), brick)
-                kstate = [anchor, 0, anchor, anchor, 1, 1]
-                next_seq, first_ts = 0, None
-                start = 1
-            else:
-                st = {c: state_tbl.column(c)[0].as_py() for c in _STATE_COLS if c != "__st_first_ts"}
-                offset = int(st["__st_tick_offset"])
-                next_seq = int(st["__st_next_seq"])
-                ft = state_tbl.column("__st_first_ts").to_numpy(zero_copy_only=False)[0]
-                first_ts = None if np.isnat(ft) else ft.astype("datetime64[us]")
-                kstate = [
-                    float(st["__st_last_close"]),
-                    int(st["__st_last_dir"]),
-                    float(st["__st_wick_min"]),
-                    float(st["__st_wick_max"]),
-                    int(st["__st_volume"]),
-                    int(st["__st_tick_open"]) - offset,  # window-local == chunk-local (chunk 0)
-                ]
+            if state_tbl.num_rows:
+                carry = unpack_carry(state_tbl)
+                kstate, (next_seq, offset, first_ts) = carry[:6], carry[6:]
+                kstate[5] -= offset  # window-local == chunk-local (chunk 0)
                 start = 0
-            out = new_output()
-            tk = time.perf_counter() if acc_kernel is not None else 0.0
-            _scan_full(times, prices, start, brick, kstate, out)
-            if acc_kernel is not None:
-                acc_kernel.add(time.perf_counter() - tk)
-            arrs = output_arrays(out)
-            m_all = len(arrs["close"])
-            ev = (
-                times[arrs["tick_index_close"]].astype("datetime64[us]")
-                if m_all
-                else np.empty(0, dtype="datetime64[us]")
-            )
-            if m_all and first_ts is None:
-                first_ts = ev[0]
-            lo = hi = 0
-            if drop_first and first_ts is not None:
-                lo = int(np.searchsorted(ev, first_ts, side="left"))
-                hi = int(np.searchsorted(ev, first_ts, side="right"))
-            keep = np.concatenate([np.arange(0, lo), np.arange(hi, m_all)])
-            cut = {k: v[keep] for k, v in output_arrays(out).items() if k != "event_time"}
-            cols, _ = _brick_cols(sym, cut, 0, len(keep), times, ts_type, 0)
-            cols["__sub"] = pa.array(np.full(len(keep), sub, dtype=np.int64))
-            bricks = _sub_table(ts_type, cols, len(keep))
-
-            scols = {
-                "symbol": pa.array([sym], pa.string()),
-                "__row_kind": pa.array([KIND_SUMMARY], pa.int32()),
-                "__sub": pa.array([sub], pa.int64()),
-                "__n_bricks": pa.array([len(keep)], pa.int64()),
-            }
-            scols.update(
-                _state_cols(
-                    ts_type,
-                    {
-                        "__st_last_close": kstate[0],
-                        "__st_last_dir": kstate[1],
-                        "__st_wick_min": kstate[2],
-                        "__st_wick_max": kstate[3],
-                        "__st_volume": kstate[4],
-                        "__st_tick_open": kstate[5],  # chunk-local
-                        "__st_next_seq": int(next_seq),  # incoming; repair renumbers
-                        "__st_tick_offset": 0,
-                        "__st_first_ts": first_ts,
-                    },
-                )
-            )
-            return pa.concat_tables([bricks, _sub_table(ts_type, scols, 1)])
-
-        # ---- speculative sub>0 scan from a cold grid anchor; in exact
-        # FP regimes this lattice is bit-identical to the true one, so
-        # the repair pass can verify convergence bitwise
-        anchor = grid_anchor(float(prices[0]), brick)
-        kstate = [anchor, 0, anchor, anchor, 1, 0]
-        out = new_output()
+            else:
+                kstate, next_seq, first_ts = new_state(float(prices[0]), brick), 0, None
+                start = 1
+        else:
+            # ---- speculative sub>0 scan from a cold grid anchor; in exact
+            # FP regimes this lattice is bit-identical to the true one, so
+            # the repair pass can verify convergence bitwise
+            anchor = grid_anchor(float(prices[0]), brick)
+            kstate, next_seq, first_ts = [anchor, 0, anchor, anchor, 1, 0], 0, None
+            start = 0
         tk = time.perf_counter() if acc_kernel is not None else 0.0
-        _scan_full(times, prices, 0, brick, kstate, out)
+        ev, arrs = run_segment(times, prices, brick, kstate, start)
         if acc_kernel is not None:
             acc_kernel.add(time.perf_counter() - tk)
-        arrs = output_arrays(out)
-        m = len(arrs["close"])
-        cols, _ = _brick_cols(sym, arrs, 0, m, times, ts_type, 0)
-        cols["__sub"] = pa.array(np.full(m, sub, dtype=np.int64))
-        bricks = _sub_table(ts_type, cols, m)
 
-        sync = _emission_sync(arrs, 0, m)
-        scols = {
-            "symbol": pa.array([sym], pa.string()),
-            "__row_kind": pa.array([KIND_SUMMARY], pa.int32()),
-            "__sub": pa.array([sub], pa.int64()),
-            "__n_bricks": pa.array([m], pa.int64()),
-        }
-        for k, v in _pack_sync(*sync).items():
-            scols[k] = pa.array([v], pa.binary())
-        scols.update(
-            _state_cols(
-                ts_type,
-                {
-                    "__st_last_close": kstate[0],
-                    "__st_last_dir": kstate[1],
-                    "__st_wick_min": kstate[2],
-                    "__st_wick_max": kstate[3],
-                    "__st_volume": kstate[4],
-                    "__st_tick_open": kstate[5],  # chunk-local
-                    "__st_next_seq": 0,
-                    "__st_tick_offset": 0,
-                    "__st_first_ts": None,
-                },
-            )
+        lo = hi = 0
+        if exact:
+            if len(ev) and first_ts is None:
+                first_ts = ev[0]
+            lo, hi = label_run(ev, first_ts if drop_first else None)
+        else:
+            extra = _pack_sync(*_emission_sync(arrs, 0, len(ev)))
+        cols = brick_columns(sym, ev, arrs, 0, ts_type, lo, hi)
+        m = len(cols["brick_seq"])
+        cols["__row_kind"] = pa.array(np.full(m, KIND_BRICK, dtype=np.int32))
+        cols["__sub"] = pa.array(np.full(m, sub, dtype=np.int64))
+        # chunk-local tick_open; the incoming next_seq (repair renumbers)
+        summary = pack_carry(
+            SUB_SCHEMA, ts_type, sym, [*kstate, next_seq, 0, first_ts],
+            __row_kind=pa.array([KIND_SUMMARY], pa.int32()),
+            __sub=pa.array([sub], pa.int64()),
+            __n_bricks=pa.array([m], pa.int64()),
+            **extra,
         )
-        return pa.concat_tables([bricks, _sub_table(ts_type, scols, 1)])
+        return pa.concat_tables([padded_table(SUB_SCHEMA, ts_type, cols, m), summary])
 
     return run
 
@@ -444,8 +292,9 @@ def make_repair_runner(
 
         ts_type = tick_tbl.schema.field("__time").type
         if tick_tbl.num_rows == 0:
-            return _sub_table(ts_type, {}, 0)
-        sym, times, prices, n = _sorted_group(tick_tbl)
+            return padded_table(SUB_SCHEMA, ts_type, {}, 0)
+        sym, times, prices = sorted_group(tick_tbl)
+        n = len(prices)
         bnds_l, ids = plans_plain.get(sym, ([], [0]))
         bnds = np.asarray(bnds_l, dtype=np.int64)
         t_us = times.astype("datetime64[us]").view("int64")
@@ -455,40 +304,20 @@ def make_repair_runner(
 
         side = side_tbl.combine_chunks()
         kind = side.column("__row_kind").to_numpy(zero_copy_only=False)
-        # timestamps must be read as datetime64 UTC instants — as_py
-        # would hand back session-tz datetimes (same pitfall as
-        # renko_chunked._run_body)
-        fts_np = side.column("__st_first_ts").to_numpy(zero_copy_only=False)
-        summaries = {}
-        state_row = None
+        summaries = {}  # sub id -> (carry, n_bricks, sync arrays)
+        cur = None
+        win_offset, running_seq, first_ts = 0, 0, None
         for i in range(side.num_rows):
-            row = {
-                f.name: side.column(f.name)[i].as_py()
-                for f in SUB_SCHEMA.fields
-                if not isinstance(f.dataType, T.TimestampType)
-            }
-            ft = fts_np[i]
-            row["__st_first_ts"] = None if np.isnat(ft) else ft.astype("datetime64[us]")
             if kind[i] == KIND_SUMMARY:
-                summaries[int(row["__sub"])] = row
+                summaries[side.column("__sub")[i].as_py()] = (
+                    unpack_carry(side, i),
+                    side.column("__n_bricks")[i].as_py(),
+                    _unpack_sync(side, i),
+                )
             elif kind[i] == KIND_STATE:
-                state_row = row
-
-        # incoming window state (globals)
-        if state_row is not None:
-            win_offset = int(state_row["__st_tick_offset"])
-            running_seq = int(state_row["__st_next_seq"])
-            first_ts = state_row["__st_first_ts"]
-            cur = [
-                float(state_row["__st_last_close"]),
-                int(state_row["__st_last_dir"]),
-                float(state_row["__st_wick_min"]),
-                float(state_row["__st_wick_max"]),
-                int(state_row["__st_volume"]),
-                int(state_row["__st_tick_open"]),  # global
-            ]
-        else:
-            win_offset, running_seq, first_ts, cur = 0, 0, None, None
+                # incoming window state (global tick_open)
+                carry = unpack_carry(side, i)
+                cur, (running_seq, win_offset, first_ts) = carry[:6], carry[6:]
 
         brick_tables = []
         dec = {"sub": [], "keep_from": [], "seq_base": [], "tick_shift": []}
@@ -498,10 +327,11 @@ def make_repair_runner(
             if hi <= lo:
                 continue
             sub_id = ids[sub]
-            summ = summaries.get(sub_id)
-            assert summ is not None, f"missing spec summary for {sym} sub={sub_id}"
+            assert sub_id in summaries, f"missing spec summary for {sym} sub={sub_id}"
+            summ, n_spec, sync = summaries[sub_id]
             shift = win_offset + lo
-            n_spec = int(summ["__n_bricks"])
+            # the spec state in window-global tick indexes
+            spec_state = [*summ[:5], summ[5] + shift]
 
             if sub == 0:
                 # chunk 0 ran exactly in the spec pass: adopt its output
@@ -510,16 +340,9 @@ def make_repair_runner(
                 dec["seq_base"].append(running_seq)
                 dec["tick_shift"].append(shift)
                 running_seq += n_spec
-                cur = [
-                    float(summ["__st_last_close"]),
-                    int(summ["__st_last_dir"]),
-                    float(summ["__st_wick_min"]),
-                    float(summ["__st_wick_max"]),
-                    int(summ["__st_volume"]),
-                    int(summ["__st_tick_open"]) + shift,  # -> global
-                ]
-                if first_ts is None and summ["__st_first_ts"] is not None:
-                    first_ts = summ["__st_first_ts"]
+                cur = spec_state
+                if first_ts is None:
+                    first_ts = summ[8]
                 continue
 
             # ---- repair scan of chunk `sub` from the true state
@@ -530,13 +353,12 @@ def make_repair_runner(
                 # the min timestamp): this chunk IS the cold start — same
                 # anchor/start=1 seeding as the one-shot scan; the spec
                 # scan of this chunk remains splice-able via convergence
-                anchor = grid_anchor(float(cp[0]), brick)
-                kstate = [anchor, 0, anchor, anchor, 1, 1]
+                kstate = new_state(float(cp[0]), brick)
                 pos0 = 1
             else:
                 kstate = [cur[0], cur[1], cur[2], cur[3], cur[4], cur[5] - shift]
                 pos0 = 0
-            s_ticks, s_close, s_dir, s_rev, s_cum = _unpack_sync(summ)
+            s_ticks, s_close, s_dir, s_rev, s_cum = sync
             horizon = int(s_ticks[-1]) if len(s_ticks) else -1
 
             out = new_output()
@@ -589,14 +411,7 @@ def make_repair_runner(
                     acc_converged.add(1)
                 # keep true bricks through j*, then adopt the spec tail
                 n_true = int(np.searchsorted(arrs["tick_index_close"], jstar, side="right"))
-                final_state = [
-                    float(summ["__st_last_close"]),
-                    int(summ["__st_last_dir"]),
-                    float(summ["__st_wick_min"]),
-                    float(summ["__st_wick_max"]),
-                    int(summ["__st_volume"]),
-                    int(summ["__st_tick_open"]) + shift,
-                ]
+                final_state = spec_state
             else:
                 if acc_fallback is not None:
                     acc_fallback.add(1)
@@ -622,28 +437,29 @@ def make_repair_runner(
             # first-brick label drop can reach into this chunk only when
             # nothing earlier in the symbol's history emitted (first_ts
             # unset): the run is at the head of the resolved stream
-            drop_lo = 0
-            drop_spec = 0
+            ev_true = ct[arrs["tick_index_close"][:n_true]]
+            drop_lo = drop_spec = 0
             if n_true and first_ts is None:
-                first_ts = ct[arrs["tick_index_close"][0]].astype("datetime64[us]")
+                first_ts = ev_true[0]
                 if drop_first:
-                    ev_true = ct[arrs["tick_index_close"][:n_true]].astype("datetime64[us]")
-                    drop_lo = int(np.searchsorted(ev_true, first_ts, side="right"))
+                    drop_lo = label_run(ev_true, first_ts)[1]
                     if drop_lo == n_true and keep_from < n_spec and len(s_ticks):
                         # run may extend into the adopted spec tail: count
                         # kept spec bricks whose event time equals first_ts
-                        s_ev = ct[s_ticks].astype("datetime64[us]")
+                        s_ev = ct[s_ticks]
                         pos_k = int(np.searchsorted(s_cum, keep_from, side="right"))
                         while pos_k < len(s_ticks) and s_ev[pos_k] == first_ts:
                             drop_spec += int(s_cum[pos_k] - max(keep_from, s_cum[pos_k - 1] if pos_k else 0))
                             pos_k += 1
 
             if n_true - drop_lo > 0:
-                cols, _ = _brick_cols(sym, arrs, drop_lo, n_true, ct, ts_type, running_seq)
+                true = {c: arrs[c][:n_true] for c in WIDE_VALUE_COLUMNS}
                 # globalize tick indexes
-                cols["tick_index_open"] = pa.array(arrs["tick_index_open"][drop_lo:n_true] + shift)
-                cols["tick_index_close"] = pa.array(arrs["tick_index_close"][drop_lo:n_true] + shift)
-                brick_tables.append(_sub_table(ts_type, cols, n_true - drop_lo))
+                true["tick_index_open"] = true["tick_index_open"] + shift
+                true["tick_index_close"] = true["tick_index_close"] + shift
+                cols = brick_columns(sym, ev_true, true, running_seq, ts_type, 0, drop_lo)
+                cols["__row_kind"] = pa.array(np.full(n_true - drop_lo, KIND_BRICK, dtype=np.int32))
+                brick_tables.append(padded_table(SUB_SCHEMA, ts_type, cols, n_true - drop_lo))
             running_seq += n_true - drop_lo
 
             dec["sub"].append(sub_id)
@@ -656,36 +472,15 @@ def make_repair_runner(
         # ---- decisions + final state
         nd = len(dec["sub"])
         dcols = {
-            "symbol": _const_str_array(sym, nd),
+            "symbol": pa.array([sym] * nd, pa.string()),
             "__row_kind": pa.array(np.full(nd, KIND_DECISION, dtype=np.int32)),
-            "__sub": pa.array(np.asarray(dec["sub"], dtype=np.int64)),
-            "__keep_from": pa.array(np.asarray(dec["keep_from"], dtype=np.int64)),
-            "__seq_base": pa.array(np.asarray(dec["seq_base"], dtype=np.int64)),
-            "__tick_shift": pa.array(np.asarray(dec["tick_shift"], dtype=np.int64)),
         }
-        tables = brick_tables + [_sub_table(ts_type, dcols, nd)]
-
-        scols = {
-            "symbol": pa.array([sym], pa.string()),
-            "__row_kind": pa.array([KIND_STATE], pa.int32()),
-        }
-        scols.update(
-            _state_cols(
-                ts_type,
-                {
-                    "__st_last_close": cur[0],
-                    "__st_last_dir": cur[1],
-                    "__st_wick_min": cur[2],
-                    "__st_wick_max": cur[3],
-                    "__st_volume": cur[4],
-                    "__st_tick_open": cur[5],
-                    "__st_next_seq": running_seq,
-                    "__st_tick_offset": win_offset + n,
-                    "__st_first_ts": first_ts,
-                },
-            )
+        for k, v in dec.items():
+            dcols[f"__{k}"] = pa.array(np.asarray(v, dtype=np.int64))
+        state = pack_carry(
+            SUB_SCHEMA, ts_type, sym, [*cur, running_seq, win_offset + n, first_ts],
+            __row_kind=pa.array([KIND_STATE], pa.int32()),
         )
-        tables.append(_sub_table(ts_type, scols, 1))
-        return pa.concat_tables(tables)
+        return pa.concat_tables(brick_tables + [padded_table(SUB_SCHEMA, ts_type, dcols, nd), state])
 
     return run

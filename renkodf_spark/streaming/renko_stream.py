@@ -5,18 +5,18 @@ hosted in `applyInPandasWithState`.
 Per-key value state is exactly the reference's scalar state
 (renkodf.py:504-511): (last_close, last_direction, wick_min, wick_max,
 volume) plus our explicit `brick_seq` counter. Completed bricks are
-emitted in append mode; the forming bar (reference `renko_animate`) is
-a client-side read over (last bricks + state), provided by
-`forming_bar_from_state` below.
+emitted in append mode; `renko_stream_animate` adds the forming bar
+(reference `renko_animate`) as an update-mode side output.
 
 Semantics notes, matching the reference and `renkodf_spark.live`:
 - cold start seeds one synthetic brick at the grid anchor with
   direction=1 (so a first move *down* needs a 2-brick traversal —
-  renkodf.py:504-508 behavior, documented in live.py).
+  renkodf.py:504-508 behavior, `kernel.stream_cold_start`).
 - warm start: pass `initial_state` (the `to_rws()` export, collected to
-  pandas) — each key resumes from its last exported brick.
+  pandas) — each key resumes from its last exported brick
+  (`kernel.warm_start`).
 - arrival order: events are replayed in event-time order *within* a
-  micro-batch (sorted here); across micro-batches the source order
+  micro-batch (stable sort here); across micro-batches the source order
   governs, as in the reference (it assumes in-order ticks). A watermark
   on the source upstream of this operator is the drop-late policy.
 
@@ -27,14 +27,16 @@ operator.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from renkodf_spark.kernel import grid_anchor, new_output, output_arrays, scan_ticks, seed_row
-from renkodf_spark.schema import STREAM_SCHEMA
+from renkodf_spark.kernel import forming_bar, run_segment, stream_cold_start, warm_start
+from renkodf_spark.operators.renko import clean_ticks
+from renkodf_spark.schema import MODE_SOURCES, MODES, STREAM_SCHEMA
 
+# (last_close, last_dir, wick_min, wick_max, volume, next brick_seq)
 _STATE_SCHEMA = (
     "last_close double, last_dir long, wick_min double, wick_max double, "
     "volume long, seq long"
@@ -42,6 +44,56 @@ _STATE_SCHEMA = (
 
 _OUT_COLUMNS = [f.name for f in STREAM_SCHEMA.fields]
 _VALUE_COLUMNS = [c for c in _OUT_COLUMNS if c not in ("symbol", "brick_seq", "event_time")]
+
+
+def warm_table(initial_state: pd.DataFrame | None, *extra: str) -> dict:
+    """``{symbol: stored state}`` from a ``to_rws()`` export: each key
+    resumes from its last exported brick, with ``brick_seq`` continuing
+    after it; ``extra`` columns of that row are appended as floats."""
+    if initial_state is None:
+        return {}
+    tail = initial_state.sort_values("brick_seq").groupby("symbol", sort=False).tail(1)
+    warm = {}
+    for row in tail.to_dict("records"):
+        ks = warm_start(row)
+        warm[str(row["symbol"])] = (*ks[:5], int(row["brick_seq"]) + 1, *(float(row[c]) for c in extra))
+    return warm
+
+
+def stream_batch(pdfs, brick: float, prior: tuple | None, emit_seed: bool):
+    """One key's micro-batch: concat and stable-sort the events, start
+    from the stored state ``prior`` (cold when ``None``), run the
+    segment. Returns ``None`` for an empty batch, else ``(seq0, cols,
+    state, price, ts)``: ``cols`` holds ``event_time`` and the stream
+    value columns of the completed bricks (the seed row first on a cold
+    start with ``emit_seed``) numbered from ``seq0``, ``state`` is the
+    new stored state, ``(price, ts)`` the batch's last tick."""
+    events = pd.concat(list(pdfs), ignore_index=True).sort_values("__time", kind="mergesort")
+    times = events["__time"].to_numpy()
+    prices = events["__price"].to_numpy()
+    if not len(prices):
+        return None
+    if prior is None:
+        seed, kstate = stream_cold_start(times[0], float(prices[0]), brick)
+        seq0, start = 0, 1
+    else:
+        kstate, seq0, seed, start = [*prior[:5], 0], prior[5], None, 0
+    ev, arrs = run_segment(times, prices, brick, kstate, start)
+    head = seed is not None and emit_seed
+    cols = {"event_time": np.concatenate([times[:1], ev]) if head else ev}
+    for c in _VALUE_COLUMNS:
+        cols[c] = np.concatenate([[seed[c]], arrs[c]]) if head else arrs[c]
+    n = len(cols["close"])
+    state = (float(kstate[0]), int(kstate[1]), float(kstate[2]), float(kstate[3]), int(kstate[4]), int(seq0 + n))
+    return seq0, cols, state, float(prices[-1]), times[-1]
+
+
+def brick_frame(symbol, seq0: int, cols: dict) -> pd.DataFrame:
+    """The stream output frame for ``stream_batch`` columns."""
+    n = len(cols["close"])
+    return pd.DataFrame({"symbol": symbol, "brick_seq": np.arange(seq0, seq0 + n, dtype=np.int64), **cols})[
+        _OUT_COLUMNS
+    ]
 
 
 def renko_stream(
@@ -62,108 +114,25 @@ def renko_stream(
     timestamp, ...). Must be small (one tail row per symbol is enough);
     it is captured in the task closure like a broadcast dim.
     """
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
-
-    warm: dict[str, tuple] = {}
-    if initial_state is not None:
-        tail = (
-            initial_state.sort_values("brick_seq").groupby("symbol", sort=False).tail(1)
-        )
-        for row in tail.itertuples(index=False):
-            warm[str(row.symbol)] = (
-                float(row.close),
-                int(row.direction),
-                float(row.close),
-                float(row.close),
-                int(row.volume),
-                int(row.brick_seq) + 1,
-            )
+    slim = clean_ticks(ticks, brick_size, symbol_col, time_col, price_col)
+    warm = warm_table(initial_state)
 
     def process(key, pdfs, state):
         symbol = key[0]
-        chunks = [
-            pdf[[time_col, price_col]].rename(columns={time_col: "t", price_col: "p"})
-            for pdf in pdfs
-        ]
-        events = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        events = events.sort_values("t", kind="mergesort")
-        times = events["t"].to_numpy()
-        prices = events["p"].to_numpy().tolist()
-        if len(prices) == 0:
+        step = stream_batch(pdfs, brick_size, state.get if state.exists else warm.get(symbol), emit_seed)
+        if step is None:
             return
+        seq0, cols, new_state, _, _ = step
+        state.update(new_state)
+        if len(cols["close"]):
+            yield brick_frame(symbol, seq0, cols)
 
-        rows_head: list[dict] = []
-        if state.exists:
-            last_close, last_dir, wick_min, wick_max, volume, seq = state.get
-            kstate = [last_close, last_dir, wick_min, wick_max, volume, 0]
-            start = 0
-        elif symbol in warm:
-            last_close, last_dir, wick_min, wick_max, volume, seq = warm[symbol]
-            kstate = [last_close, last_dir, wick_min, wick_max, volume, 0]
-            start = 0
-        else:
-            anchor = grid_anchor(prices[0], brick_size)
-            seq = 0
-            if emit_seed:
-                seed = seed_row(times[0], anchor)
-                seed["brick_seq"] = seq
-                rows_head.append(seed)
-                seq += 1
-            # reference cold start: state mirrors the seed row (dir=1)
-            kstate = [anchor, 1, anchor, anchor, 1, 0]
-            start = 1
-
-        out = new_output()
-        scan_ticks(times, prices, start, brick_size, kstate, out)
-
-        n = len(out["event_time"])
-        state.update((kstate[0], kstate[1], kstate[2], kstate[3], int(kstate[4]), int(seq + n)))
-
-        if n == 0 and not rows_head:
-            return
-        arrs = output_arrays(out)
-        frame = {
-            "symbol": symbol,
-            "brick_seq": range(seq, seq + n),
-            "event_time": out["event_time"],
-        }
-        for c in _VALUE_COLUMNS:
-            frame[c] = arrs[c]
-        res = pd.DataFrame(frame)
-        if rows_head:
-            head = pd.DataFrame(
-                [
-                    {
-                        "symbol": symbol,
-                        "brick_seq": r["brick_seq"],
-                        "event_time": r["event_time"],
-                        **{c: r[c] for c in _VALUE_COLUMNS},
-                    }
-                    for r in rows_head
-                ]
-            )
-            res = pd.concat([head, res], ignore_index=True)
-        yield res[_OUT_COLUMNS]
-
-    slim = _clean_input(ticks, symbol_col, time_col, price_col)
-    return slim.groupBy(symbol_col).applyInPandasWithState(
+    return slim.groupBy("symbol").applyInPandasWithState(
         process,
         outputStructType=STREAM_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf="NoTimeout",
-    )
-
-
-def _clean_input(ticks: DataFrame, symbol_col: str, time_col: str, price_col: str) -> DataFrame:
-    """Same null/NaN guard as batch renko(): NaN would silently poison
-    the wick min/max state (and raise in the scalar scan); filtering on
-    the projection keeps it at the source."""
-    return ticks.select(symbol_col, time_col, price_col).filter(
-        F.col(time_col).isNotNull()
-        & F.col(price_col).isNotNull()
-        & ~F.isnan(F.col(price_col).cast("double"))
     )
 
 
@@ -197,174 +166,38 @@ def renko_stream_animate(
     projection); its values are written into every variant column, so
     only the chosen mode's projection of the forming row is meaningful.
     """
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
-    from renkodf_spark.schema import MODE_SOURCES, MODES
-
+    slim = clean_ticks(ticks, brick_size, symbol_col, time_col, price_col)
     if mode not in MODES:
         raise ValueError(f"Only {list(MODES)} options are valid.")
-    open_src, _high_src, _low_src = MODE_SOURCES[mode]
-    nongap_rule = mode in ("nongap", "reverse-nongap", "fake-r-nongap")
-
-    warm: dict[str, tuple] = {}
-    if initial_state is not None:
-        tail = initial_state.sort_values("brick_seq").groupby("symbol", sort=False).tail(1)
-        for row in tail.itertuples(index=False):
-            d = row._asdict() if hasattr(row, "_asdict") else dict(zip(initial_state.columns, row))
-            warm[str(d["symbol"])] = (
-                float(d["close"]),
-                int(d["direction"]),
-                float(d["close"]),
-                float(d["close"]),
-                int(d["volume"]),
-                int(d["brick_seq"]) + 1,
-                float(d[open_src]),
-            )
+    open_src = MODE_SOURCES[mode][0]
+    warm = warm_table(initial_state, open_src)
 
     def process(key, pdfs, state):
         symbol = key[0]
-        chunks = [
-            pdf[[time_col, price_col]].rename(columns={time_col: "t", price_col: "p"})
-            for pdf in pdfs
-        ]
-        events = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        events = events.sort_values("t", kind="mergesort")
-        times = events["t"].to_numpy()
-        prices = events["p"].to_numpy().tolist()
-        if len(prices) == 0:
+        stored = state.get if state.exists else warm.get(symbol)
+        prior, last_open = (stored[:6], stored[6]) if stored is not None else (None, None)
+        step = stream_batch(pdfs, brick_size, prior, emit_seed=True)
+        if step is None:
             return
+        seq0, cols, new_state, price, ts = step
+        if len(cols["close"]):
+            last_open = float(cols[open_src][-1])
+        state.update((*new_state, last_open))
 
-        rows_head: list[dict] = []
-        if state.exists:
-            *kvals, seq, last_open = state.get
-            kstate = list(kvals) + [0]
-            start = 0
-        elif symbol in warm:
-            *kvals, seq, last_open = warm[symbol]
-            kstate = list(kvals) + [0]
-            start = 0
-        else:
-            anchor = grid_anchor(prices[0], brick_size)
-            seq = 0
-            seed = seed_row(times[0], anchor)
-            seed["brick_seq"] = seq
-            seed["is_forming"] = 0
-            rows_head.append(seed)
-            seq += 1
-            kstate = [anchor, 1, anchor, anchor, 1, 0]
-            last_open = anchor
-            start = 1
+        last_close, _, wick_min, wick_max, volume, next_seq = new_state
+        o, h, lo, direction = forming_bar(mode, price, last_open, last_close, wick_min, wick_max)
+        forming = {"event_time": ts, "close": price, "volume": volume, "direction": direction, "is_reversal": 0}
+        for o_src, h_src, l_src in MODE_SOURCES.values():
+            forming.update({o_src: o, h_src: h, l_src: lo})
+        cols = {c: np.append(v, forming[c]) for c, v in cols.items()}
+        res = brick_frame(symbol, seq0, cols)
+        res["is_forming"] = (res["brick_seq"] == next_seq).astype(np.int32)
+        yield res
 
-        out = new_output()
-        scan_ticks(times, prices, start, brick_size, kstate, out)
-        n = len(out["event_time"])
-        arrs = output_arrays(out)
-        if n:
-            last_open = float(arrs[open_src][-1])
-        state.update(
-            (kstate[0], kstate[1], kstate[2], kstate[3], int(kstate[4]), int(seq + n), last_open)
-        )
-
-        frames = []
-        if rows_head:
-            frames.append(pd.DataFrame(
-                [{"symbol": symbol, "brick_seq": r["brick_seq"], "event_time": r["event_time"],
-                  **{c: r[c] for c in _VALUE_COLUMNS}, "is_forming": 0}
-                 for r in rows_head]
-            ))
-        if n:
-            frame = {"symbol": symbol, "brick_seq": range(seq, seq + n), "event_time": out["event_time"]}
-            for c in _VALUE_COLUMNS:
-                frame[c] = arrs[c]
-            bricks = pd.DataFrame(frame)
-            bricks["is_forming"] = 0
-            frames.append(bricks)
-
-        # forming bar (reference renko_animate branching, renkodf.py:817-849)
-        price = float(prices[-1])
-        last_close, _ld, wick_min, wick_max, volume, _to = kstate
-        o = price
-        h = wick_max if mode != "normal" else price
-        lo = wick_min if mode != "normal" else price
-        if last_close > last_open:  # previous brick was up
-            if price > last_close:
-                o = wick_min if nongap_rule else last_close
-                if mode == "normal":
-                    lo = last_close
-            elif price < last_open:
-                o = wick_max if nongap_rule else last_open
-                if mode == "normal":
-                    h = last_open
-        else:
-            if price < last_close:
-                o = wick_max if nongap_rule else last_close
-                if mode == "normal":
-                    h = last_close
-            elif price > last_open:
-                o = wick_min if nongap_rule else last_open
-                if mode == "normal":
-                    lo = last_open
-        direction = 1 if price > o else -1 if price < o else 0
-        forming = {
-            "symbol": symbol,
-            "brick_seq": int(seq + n),
-            "event_time": times[-1],
-            "is_forming": 1,
-            "close": price,
-            "volume": int(volume),
-            "direction": direction,
-            "is_reversal": 0,
-            "open": o,
-            "high": h,
-            "low": lo,
-            "normal_high": h,
-            "normal_low": lo,
-            "nongap_open": o,
-            "reverse_nongap_open": o,
-            "reverse_fake_nongap_open": o,
-            "reverse_high": h,
-            "reverse_low": lo,
-            "fake_high": h,
-            "fake_low": lo,
-        }
-        frames.append(pd.DataFrame([forming]))
-        res = pd.concat(frames, ignore_index=True)
-        yield res[[f.name for f in _FORMING_SCHEMA.fields]]
-
-    slim = _clean_input(ticks, symbol_col, time_col, price_col)
-    return slim.groupBy(symbol_col).applyInPandasWithState(
+    return slim.groupBy("symbol").applyInPandasWithState(
         process,
         outputStructType=_FORMING_SCHEMA,
         stateStructType=_ANIMATE_STATE_SCHEMA,
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-
-
-def forming_bar_from_state(
-    completed: pd.DataFrame,
-    last_price: float,
-    last_ts,
-    state: tuple,
-    mode: str = "wicks",
-) -> pd.DataFrame:
-    """Client-side forming-bar synthesis from the latest completed
-    bricks + streaming state — the streaming analog of
-    `RenkoLive.renko_animate` (reference renkodf.py:767-858) for sinks
-    that want the in-progress bar."""
-    from renkodf_spark.live import RenkoLive
-
-    live = RenkoLive.__new__(RenkoLive)
-    live._ts_unit = "us"
-    live._brick_size = 0.0  # unused by animate
-    live._buf = {"timestamp": completed["timestamp"].tolist() if "timestamp" in completed else []}
-    from renkodf_spark.live import _LIVE_COLUMNS
-
-    for c in _LIVE_COLUMNS:
-        live._buf[c] = completed[c].tolist() if c in completed else []
-    live._initial_df = live._wide_frame()
-    last_close, last_dir, wick_min, wick_max, volume, _seq = state
-    live._state = [last_close, last_dir, wick_min, wick_max, volume, 0]
-    live._ws_timestamp = last_ts
-    live._ws_price = last_price
-    return live.renko_animate(mode, max_len=0)

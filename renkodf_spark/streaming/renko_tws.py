@@ -1,8 +1,10 @@
 """Spark 4 `transformWithStateInPandas` variant of the streaming Renko
-operator — same semantics as `renko_stream` (applyInPandasWithState),
-hosted in the newer StatefulProcessor API, which carries the warm-start
-table as a first-class `initialState` GroupedData (SURVEY §1.4 maps the
-reference's RenkoWS state to exactly this) instead of a task closure.
+operator — same semantics and the same per-micro-batch step as
+`renko_stream` (applyInPandasWithState), hosted in the newer
+StatefulProcessor API, which carries the warm-start table as a
+first-class `initialState` GroupedData (SURVEY §1.4 maps the
+reference's RenkoWS state to exactly this) instead of a task closure,
+so the warm table scales past what a closure can capture.
 
 Use this one when running on Spark 4 clusters; `renko_stream` remains
 for 3.4+ compatibility. Both are differential-tested against each other
@@ -17,21 +19,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor, StatefulProcessorHandle
 
-from renkodf_spark.kernel import grid_anchor, new_output, output_arrays, scan_ticks, seed_row
+from renkodf_spark.operators.renko import clean_ticks
 from renkodf_spark.schema import STREAM_SCHEMA
-
-_OUT_COLUMNS = [f.name for f in STREAM_SCHEMA.fields]
-_VALUE_COLUMNS = [c for c in _OUT_COLUMNS if c not in ("symbol", "brick_seq", "event_time")]
-
-_STATE_SCHEMA = (
-    "last_close double, last_dir bigint, wick_min double, wick_max double, "
-    "volume bigint, seq bigint"
-)
+from renkodf_spark.streaming.renko_stream import _STATE_SCHEMA, brick_frame, stream_batch, warm_table
 
 
 class RenkoProcessor(StatefulProcessor):
     """Per-symbol Renko state machine (reference RenkoWS scalar state,
-    renkodf.py:504-511, plus the brick_seq counter)."""
+    renkodf.py:504-511, plus the brick_seq counter) over the cleaned
+    ``symbol, __time, __price`` ticks."""
 
     def __init__(self, brick_size: float, emit_seed: bool = True):
         self._brick = float(brick_size)
@@ -41,73 +37,17 @@ class RenkoProcessor(StatefulProcessor):
         self._state = handle.getValueState("renko", _STATE_SCHEMA)
 
     def handleInitialState(self, key, initialState: pd.DataFrame, timerValues) -> None:
-        # warm start from a to_rws export: resume from the last brick row
-        last = initialState.sort_values("brick_seq").iloc[-1]
-        self._state.update(
-            (
-                float(last["close"]),
-                int(last["direction"]),
-                float(last["close"]),
-                float(last["close"]),
-                int(last["volume"]),
-                int(last["brick_seq"]) + 1,
-            )
-        )
+        self._state.update(warm_table(initialState)[str(key[0])])
 
     def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        symbol = key[0]
-        chunks = [pdf[["event_time", "close"]] for pdf in rows]
-        events = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        events = events.sort_values("event_time", kind="mergesort")
-        times = events["event_time"].to_numpy()
-        prices = events["close"].to_numpy().tolist()
-        if not prices:
+        prior = self._state.get() if self._state.exists() else None
+        step = stream_batch(rows, self._brick, prior, self._emit_seed)
+        if step is None:
             return
-
-        rows_head = []
-        if self._state.exists():
-            last_close, last_dir, wick_min, wick_max, volume, seq = self._state.get()
-            kstate = [last_close, last_dir, wick_min, wick_max, volume, 0]
-            start = 0
-        else:
-            anchor = grid_anchor(prices[0], self._brick)
-            seq = 0
-            if self._emit_seed:
-                seed = seed_row(times[0], anchor)
-                seed["brick_seq"] = seq
-                rows_head.append(seed)
-                seq += 1
-            kstate = [anchor, 1, anchor, anchor, 1, 0]
-            start = 1
-
-        out = new_output()
-        scan_ticks(times, prices, start, self._brick, kstate, out)
-        n = len(out["event_time"])
-        self._state.update(
-            (kstate[0], int(kstate[1]), kstate[2], kstate[3], int(kstate[4]), int(seq + n))
-        )
-        if n == 0 and not rows_head:
-            return
-
-        arrs = output_arrays(out)
-        frame = {
-            "symbol": symbol,
-            "brick_seq": range(seq, seq + n),
-            "event_time": out["event_time"],
-        }
-        for c in _VALUE_COLUMNS:
-            frame[c] = arrs[c]
-        res = pd.DataFrame(frame)
-        if rows_head:
-            head = pd.DataFrame(
-                [
-                    {"symbol": symbol, "brick_seq": r["brick_seq"], "event_time": r["event_time"],
-                     **{c: r[c] for c in _VALUE_COLUMNS}}
-                    for r in rows_head
-                ]
-            )
-            res = pd.concat([head, res], ignore_index=True)
-        yield res[_OUT_COLUMNS]
+        seq0, cols, state, _, _ = step
+        self._state.update(state)
+        if len(cols["close"]):
+            yield brick_frame(key[0], seq0, cols)
 
     def close(self) -> None:
         pass
@@ -127,8 +67,7 @@ def renko_stream_tws(
 
     ``initial_state``: optional warm-start DataFrame in ``to_rws()``
     shape (must contain symbol, brick_seq, close, direction, volume)."""
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
+    slim = clean_ticks(ticks, brick_size, symbol_col, time_col, price_col)
     try:  # the TWS state-server protocol needs protobuf on driver+workers
         from google.protobuf import descriptor  # noqa: F401
     except ImportError as e:
@@ -137,11 +76,6 @@ def renko_stream_tws(
             "use renkodf_spark.streaming.renko_stream (applyInPandasWithState) "
             "on environments without it"
         ) from e
-    slim = ticks.select(
-        ticks[symbol_col].alias("symbol"),
-        ticks[time_col].alias("event_time"),
-        ticks[price_col].alias("close"),
-    )
     init = initial_state.groupBy("symbol") if initial_state is not None else None
     return slim.groupBy("symbol").transformWithStateInPandas(
         RenkoProcessor(brick_size, emit_seed),

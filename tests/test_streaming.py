@@ -70,23 +70,40 @@ def _run_stream(spark, tmpdir, pdf, n_files=4, initial_state=None, emit_seed=Tru
     return out.sort_values(["symbol", "brick_seq"]).reset_index(drop=True)
 
 
-def test_stream_matches_live_replay(spark, tmp_path):
-    pdf = _two_symbol_ticks()
-    out = _run_stream(spark, str(tmp_path), pdf, n_files=4)
+def _sparse_one_symbol(n=6000):
+    """One symbol whose ticks move ~1% of a brick each: one micro-batch
+    of it takes the kernel's skip-scan branch."""
+    rng = np.random.default_rng(5)
+    drift = np.where(np.arange(n) < n // 2, 0.002, -0.003)
+    close = 100.0 + np.cumsum(rng.normal(0, 0.01, n) + drift)
+    t = pd.date_range("2024-01-01", periods=n, freq="1s").astype("datetime64[us]")
+    return pd.DataFrame({"event_time": t, "close": close, "symbol": "SPARSE"})
 
-    assert set(out["symbol"]) == {"AAA", "BBB"}
-    for sym in ["AAA", "BBB"]:
-        live = _live_replay(pdf, sym)
-        want = live._wide_frame().reset_index(drop=True)
-        got = out[out["symbol"] == sym].reset_index(drop=True)
-        assert len(got) == len(want), sym
-        assert got["brick_seq"].tolist() == list(range(len(want)))
-        np.testing.assert_array_equal(
-            _us(got["event_time"]), want["timestamp"].to_numpy(), err_msg=f"{sym}.ts"
-        )
-        for col in ["open", "high", "low", "close", "volume", "direction", "is_reversal",
-                    "normal_high", "nongap_open", "reverse_high", "fake_low"]:
-            np.testing.assert_array_equal(got[col].to_numpy(), want[col].to_numpy(), err_msg=f"{sym}.{col}")
+
+def test_stream_matches_live_replay(spark, tmp_path):
+    from renkodf_spark.kernel import choose_scan
+
+    sparse = _sparse_one_symbol()
+    assert choose_scan(sparse["close"].to_numpy(), BRICK)
+    # (input, micro-batches): dense multi-batch replay, and >= 4096
+    # sparse ticks of one symbol in a single micro-batch
+    for i, (pdf, n_files) in enumerate([(_two_symbol_ticks(), 4), (sparse, 1)]):
+        out = _run_stream(spark, str(tmp_path / str(i)), pdf, n_files=n_files)
+
+        assert set(out["symbol"]) == set(pdf["symbol"])
+        for sym in set(pdf["symbol"]):
+            live = _live_replay(pdf, sym)
+            want = live._wide_frame().reset_index(drop=True)
+            got = out[out["symbol"] == sym].reset_index(drop=True)
+            assert len(got) == len(want), sym
+            assert len(want) > 3, sym
+            assert got["brick_seq"].tolist() == list(range(len(want)))
+            np.testing.assert_array_equal(
+                _us(got["event_time"]), want["timestamp"].to_numpy(), err_msg=f"{sym}.ts"
+            )
+            for col in ["open", "high", "low", "close", "volume", "direction", "is_reversal",
+                        "normal_high", "nongap_open", "reverse_high", "fake_low"]:
+                np.testing.assert_array_equal(got[col].to_numpy(), want[col].to_numpy(), err_msg=f"{sym}.{col}")
 
 
 def test_stream_warm_start_resumes(spark, tmp_path):
